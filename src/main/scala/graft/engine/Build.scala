@@ -25,7 +25,8 @@ final case class BuildOptions(
     /** Run the post-build invariant verification pass (engine.py:1342-1384). */
     verify: Boolean = true,
     /** Eager duplicate (key,ts) detection per feature (engine.py:586-627).
-      * An extra job per distinct source; disable for trusted inputs. */
+      * One detector query over every checked feature — two jobs per
+      * build, whatever the feature count; disable for trusted inputs. */
     checkDuplicates: Boolean = true,
     /** Collect matched/missing per-feature stats (one extra agg job). */
     collectStats: Boolean = true,
@@ -52,8 +53,10 @@ final case class BuildOptions(
       * (engine.py:945-958, driven by the rich bar in cli.py:629-668).
       * Stages: `load` / `compute <feature>` / `join <feature>` /
       * `write` / `verify` (featureName is "" for the non-feature
-      * stages). `compute` and `join` fire at PLAN time (Spark builds
-      * one lazy DAG — per-feature work has no per-feature action);
+      * stages). `compute` fires as each feature is planned (a store
+      * miss writes its feature cache there, and the one duplicate
+      * detector for all features runs after the last `compute`);
+      * `join` fires at PLAN time (Spark builds one lazy DAG);
       * `write` and `verify` fire immediately before the action that
       * executes the plan, which is where the wall-clock goes. Must be
       * cheap and non-throwing; never invoked on a build-cache hit. */
@@ -147,9 +150,20 @@ final case class BuildResult(
   * Spark-first lifecycle (vs the reference's temp-table pipeline,
   * SURVEY §3.1): steps 1-2 are driver-only validation; the label spine
   * and per-feature joins build ONE lazy DataFrame DAG; all per-feature
-  * stats and invariant checks collapse into a single aggregation — an
-  * Observation riding the output write when one is requested, so the
-  * whole build is ONE job (the reference runs 3 queries per feature).
+  * stats and invariant checks collapse into a single aggregation (the
+  * reference runs 3 queries per feature). Spark jobs per `progress`
+  * stage, as a sorted store build at one shuffle partition runs them:
+  *   - `load`, `join`: none (plan time);
+  *   - `compute`: one parquet write per feature-cache miss, plus two
+  *     for the duplicate detector shared by every feature;
+  *   - `verify`: three — the assembled frame cached through its join
+  *     shuffle, then the stats aggregate over the cache;
+  *   - `write`: two — the sort's shuffle and the parquet write.
+  * A 4-feature build that misses every feature cache thus runs
+  * 4 + 2 + 3 + 2 = 11 jobs. An unsorted output
+  * lets the stats aggregate ride the write as an Observation (no
+  * `verify` jobs); more shuffle partitions add AQE map stages and the
+  * sort's range-sampling job.
   */
 object Build {
 
@@ -322,9 +336,7 @@ object Build {
             case None =>
               val computed = computeFeature(spark, f, labels, sourceCache)
               st.saveFeatureCache(computed.df, key)
-              ComputedFeature(
-                graft.sources.SchemaCache.parquet(spark, st.featureCachePath(key)),
-                computed.timeCol)
+              ComputedFeature(st.loadFeatureCache(spark, key).get, computed.timeCol)
           }
         case None => computeFeature(spark, f, labels, sourceCache)
       }
@@ -385,6 +397,10 @@ object Build {
         timeCol: String, nsValueCols: Seq[String], timeOuts: Seq[String],
         featNames: Seq[String])
 
+    // units whose duplicate guard is on, in declaration order: checked
+    // together by ONE detector query once every unit is planned
+    val dupChecks = scala.collection.mutable.ArrayBuffer.empty[DupCheck]
+
     val units: Seq[JoinUnit] = groups.map {
       case Seq(f) =>
         options.progress("compute", f.name)
@@ -393,7 +409,7 @@ object Build {
         requireColumns(s"Feature '${f.name}'", feat.df, rightKeys :+ feat.timeCol)
         checkTimezone(labels, rawLabels, f, feat)
         if (options.checkDuplicates && f.onDuplicate == OnDuplicate.Error)
-          checkDuplicates(f, feat.df, rightKeys, feat.timeCol)
+          dupChecks += DupCheck(f, feat.df, rightKeys, feat.timeCol)
         val valueCols = feat.df.columns.filterNot(c =>
           rightKeys.contains(c) || c == feat.timeCol).toSeq
         valueColsOf(f.name) = valueCols
@@ -431,13 +447,16 @@ object Build {
           combined, rightKeys :+ "feature_time")
         checkTimezone(labels, rawLabels, f0, ComputedFeature(combined, "feature_time"))
         if (options.checkDuplicates && f0.onDuplicate == OnDuplicate.Error)
-          checkDuplicates(f0, combined, rightKeys, "feature_time")
+          dupChecks += DupCheck(f0, combined, rightKeys, "feature_time")
         val nsCols = grp.flatMap(f => valueColsOf(f.name).map(Names.namespaced(f.name, _)))
         // each merged feature gets its own {f}__feature_time alias —
         // identical values by construction (same embargo → same row)
         JoinUnit(f0, combined, rightKeys, "feature_time", nsCols,
           grp.map(f => Names.featureTimeCol(f.name)), grp.map(_.name))
     }
+    // after every driver-side schema/timezone check, so those errors
+    // win over a duplicate found in an earlier feature
+    detectDuplicates(dupChecks.toSeq)
 
     // Units whose join parameters agree — embargo, staleness, and
     // unionable key/time column types — share ONE shuffle + window via
@@ -990,6 +1009,44 @@ object Build {
         s"Feature '${f.name}': timestamp timezone-awareness mismatch — labels '${labels.labelTime}' is $lt but feature time is $ft.\n" +
           "  Fix: make both tz-aware (TIMESTAMP) or both naive (TIMESTAMP_NTZ).")
   }
+
+  /** One feature frame whose `(keys, timeCol)` tuples must be unique
+    * (engine.py:586-627). */
+  private[graft] final case class DupCheck(f: Feature, df: DataFrame, keys: Seq[String],
+      timeCol: String)
+
+  /** The duplicate guard for every unit of a build in ONE query: the
+    * union of each unit's `(unit index, xxhash64(keys, time))`, grouped
+    * on both columns; a group of two or more flags its unit. The
+    * flagged indices ride an Observation on a no-op write, so the
+    * detector costs two jobs (shuffle-map + result) for any number of
+    * features or shuffle partitions, and its driver result is one row.
+    * (`limit(1).collect()` would not: `executeTake` scans partitions in
+    * growing rounds, one job each.) Equal tuples hash equally, nulls
+    * included, just as groupBy groups nulls together, so no duplicate
+    * is missed; each flagged unit is then confirmed by the exact
+    * [[checkDuplicates]], which rejects a 64-bit hash collision and
+    * alone words the error. */
+  private[graft] def detectDuplicates(checks: Seq[DupCheck]): Unit = {
+    if (checks.isEmpty) return
+    val hashed = checks.zipWithIndex.map { case (c, i) =>
+      c.df.select(lit(i).as("__di"),
+        xxhash64((c.keys :+ c.timeCol).map(col): _*).as("__dh"))
+    }.reduce(_ union _)
+    val obs = org.apache.spark.sql.Observation()
+    hashed.groupBy("__di", "__dh").count().filter(col("count") > 1)
+      .observe(obs, collect_set(col("__di")).as("units"))
+      .write.format("noop").mode("overwrite").save()
+    confirmDuplicates(checks, obs.get("units").asInstanceOf[scala.collection.Seq[Int]].toSet)
+  }
+
+  /** Exact check of the `flagged` units, in declaration order: the
+    * first one that really holds duplicates raises. */
+  private[graft] def confirmDuplicates(checks: Seq[DupCheck], flagged: Set[Int]): Unit =
+    checks.indices.filter(flagged).foreach { i =>
+      val c = checks(i)
+      checkDuplicates(c.f, c.df, c.keys, c.timeCol)
+    }
 
   private def checkDuplicates(f: Feature, df: DataFrame, keys: Seq[String],
       timeCol: String): Unit = {

@@ -218,13 +218,21 @@ final class Store(val root: String = ".graft",
   def featureCachePath(key: String): String =
     cacheDir.resolve(s"$key.parquet").toString
 
+  /** Opens through [[graft.sources.SchemaCache]]: a hit on a cache this
+    * session wrote or read before runs no schema-inference job. */
   def loadFeatureCache(spark: SparkSession, key: String): Option[DataFrame] = {
-    val p = Paths.get(featureCachePath(key))
-    if (Files.exists(p)) Some(spark.read.parquet(p.toString)) else None
+    val p = featureCachePath(key)
+    if (Files.exists(Paths.get(p))) Some(graft.sources.SchemaCache.parquet(spark, p))
+    else None
   }
 
-  def saveFeatureCache(df: DataFrame, key: String): Unit =
-    df.write.mode("overwrite").parquet(featureCachePath(key))
+  /** Writes the cache and records its schema, so the re-read after a
+    * miss skips inference. */
+  def saveFeatureCache(df: DataFrame, key: String): Unit = {
+    val p = featureCachePath(key)
+    df.write.mode("overwrite").parquet(p)
+    graft.sources.SchemaCache.put(p, df.schema)
+  }
 
   // ---- build cache / manifests -------------------------------------
 
